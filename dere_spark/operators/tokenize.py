@@ -62,89 +62,6 @@ def tokenize(
     return toks
 
 
-def tokenize_arrow(
-    documents: DataFrame,
-    sep: str = " ",
-    text_col: str = "text",
-    sep_len: int | None = None,
-) -> DataFrame:
-    """Shuffle-free tokenizer: offsets via a vectorized Arrow kernel.
-
-    Same output contract as `tokenize`, different physical strategy: the
-    prefix sum runs INSIDE each document row (ragged cumsum over the
-    batch's flattened token lengths — one numpy pass, no per-row Python),
-    so no shuffle, no sort, no window. On a bandwidth-bound cluster this
-    removes the pipeline's largest exchange: the full token stream.
-
-    Contract parity with `tokenize`: ``sep`` is split as a REGEX
-    (pandas defaults a 1-char pattern to a literal; the JVM path is
-    always Java-regex, so the kernel forces regex=True), NULL ``text``
-    rows emit no tokens (the JVM path's split(NULL) drops the row), and
-    ``sep_len`` overrides the offset step when the pattern's match
-    width differs from ``len(sep)``. Known dialect residue: a pattern
-    that can match the EMPTY string (e.g. a bare ``|``) still diverges —
-    Python's re.split keeps the leading zero-width field that Java
-    discards; don't use zero-width-capable separators with either path.
-
-    mapInPandas over (doc_id, text) -> exploded token rows; the kernel
-    flattens every document's tokens in the Arrow batch into single numpy
-    arrays, cumsums once, and re-bases each document's offsets by segment.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    if sep_len is None:
-        sep_len = len(sep)
-    out_schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("token_idx", IntegerType()),
-            StructField("token", StringType()),
-            StructField("left", IntegerType()),
-            StructField("right", IntegerType()),
-        ]
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            batch = batch[batch[text_col].notna()]
-            if not len(batch):
-                continue
-            token_lists = batch[text_col].str.split(sep, regex=True)
-            counts = token_lists.str.len().to_numpy()
-            flat = np.concatenate([np.asarray(t, dtype=object) for t in token_lists])
-            lens = np.char.str_len(flat.astype(str)).astype(np.int64)
-            # exclusive prefix sum of (len + sep) over the flat stream
-            csum = np.concatenate(([0], np.cumsum(lens + sep_len)[:-1]))
-            # re-base each document's segment to start at 0
-            seg_starts = np.repeat(
-                csum[np.concatenate(([0], np.cumsum(counts)[:-1]))], counts
-            )
-            left = (csum - seg_starts).astype(np.int32)
-            right = (left + lens).astype(np.int32)
-            token_idx = (
-                np.arange(len(flat), dtype=np.int64)
-                - np.repeat(np.concatenate(([0], np.cumsum(counts)[:-1])), counts)
-            ).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(batch["doc_id"].to_numpy(), counts),
-                    "token_idx": token_idx,
-                    "token": flat,
-                    "left": left,
-                    "right": right,
-                }
-            )
-
-    return documents.select("doc_id", text_col).mapInPandas(kernel, out_schema)
-
-
 def fidelity_violations(documents: DataFrame, tokens: DataFrame) -> DataFrame:
     """Rows where substring(text, left, right) != token — must be empty.
 

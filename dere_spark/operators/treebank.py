@@ -18,8 +18,9 @@ monotone left-to-right alignment (every Treebank rule only inserts
 spaces between substrings of the original text, so each emitted token is
 a verbatim substring and alignment is a single forward scan).
 
-Scale: same contract and partitioning story as ``tokenize_arrow`` — no
-shuffle, no window; the kernel is embarrassingly parallel per document.
+Scale: no shuffle, no window; the kernel is embarrassingly parallel per
+document. It is the recorded-nltk reference implementation; the pipeline
+runs the JVM-side ``tokenize_treebank_sql``, which must equal it.
 """
 
 from __future__ import annotations
@@ -242,10 +243,9 @@ _LETTER_CONTRACTIONS = ("cannot", "gimme", "gonna", "gotta", "lemme", "wanna")
 def tokenize_treebank_sql(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Treebank tokenization entirely JVM-side — the webtext default.
 
-    Physical strategy (why this beats the Arrow kernel at scale): the r2
-    A/B showed Python->JVM Arrow IPC of the full token stream LOSES to a
-    JVM shuffle (webtext.py module note). This variant keeps every byte in
-    the JVM: whitespace words come from the existing windowed ``tokenize``
+    Physical strategy: Python<->JVM Arrow IPC of the full token stream
+    costs more than a JVM doc_id shuffle (webtext.py module note), so this
+    variant keeps every byte in the JVM: whitespace words come from the existing windowed ``tokenize``
     (single doc_id exchange, reused downstream), then each word is
     sub-split by the nltk 3.3 rule chain compiled to ``regexp_replace``
     Catalyst expressions, with quote-back conversion and offsets done by
@@ -348,9 +348,9 @@ def tokenize_treebank(documents: DataFrame, text_col: str = "text") -> DataFrame
     """documents(doc_id, text, ...) -> tokens(doc_id, token_idx, token,
     left, right) with Treebank segmentation and exact offsets.
 
-    Same output contract as ``tokenize``/``tokenize_arrow`` (the fidelity
-    invariant ``substring(text, left+1, right-left) == token`` holds), so
-    it drops into every downstream operator unchanged.
+    Same output contract as ``tokenize`` (the fidelity invariant
+    ``substring(text, left+1, right-left) == token`` holds), so it drops
+    into every downstream operator unchanged.
     """
     import pandas as pd
 

@@ -23,6 +23,7 @@ recovery (SURVEY §4.1 'Resumability: none'), restarts from zero.
 from __future__ import annotations
 
 import hashlib
+import inspect
 import json
 import os
 import time
@@ -163,56 +164,61 @@ class CheckpointedPipeline:
         return self.stages[name].reused
 
 
+def step_definition(step: Callable) -> str:
+    """How a stage step computes its output, as text for a fingerprint:
+    the step's qualified name, its source, and the values of the
+    module-level constants it reads (gazetteers, distances). Swapping or
+    editing a step therefore invalidates its checkpoint; the operators it
+    calls are covered by name only."""
+    scope = step.__globals__
+    consts = [
+        f"{n}={scope[n]!r}"
+        for n in step.__code__.co_names
+        if isinstance(scope.get(n), (dict, tuple, int, float, str))
+    ]
+    return "\n".join(
+        [f"{step.__module__}.{step.__qualname__}", inspect.getsource(step), *consts]
+    )
+
+
+#: Flagship stages materialized by `run_checkpointed_extraction`.
+CHECKPOINTED = ("spans", "frames", "triples")
+
+
 def run_checkpointed_extraction(
     spark: SparkSession, sf_dir: str, root: str
 ) -> Dict[str, DataFrame]:
-    """The webtext pipeline with a checkpoint after each major stage."""
-    from dere_spark.webtext import (
-        ENTITY_ALIASES,
-        GAZETTEERS,
-        MAX_TOKEN_DISTANCE,
-        webtext_plan,
-    )
-    from dere_spark.operators.frames import assemble_frames, best_fillers, score_pairs
-    from dere_spark.operators.pairs import candidate_pairs, whitelist_df
-    from dere_spark.operators.spans import detect_spans, gazetteer_df
-    from dere_spark.operators.tokenize import tokenize
-    from dere_spark.operators.triples import entity_dictionary, frames_to_triples
+    """The webtext stage chain with a checkpoint after spans, frames and
+    triples. The steps between two checkpoints run inside the later
+    one's build, so a reused checkpoint never plans them; its fingerprint
+    covers those steps' definitions and chains to the previous checkpoint
+    (the first one to the input corpus)."""
     from dere_spark.sources.documents import load_documents
+    from dere_spark.webtext import run_stages
 
-    plan = webtext_plan()
     cp = CheckpointedPipeline(spark, root)
-    params = fingerprint(
-        sf_dir,
-        input_signature(sf_dir),  # in-place corpus regeneration invalidates
-        json.dumps(sorted(GAZETTEERS.items())),
-        str(MAX_TOKEN_DISTANCE),
-    )
+    # the input signature makes in-place corpus regeneration invalidate
+    inputs = [sf_dir, input_signature(sf_dir)]
+    steps: List[Callable] = []
+    upstream: List[str] = []
 
-    spans = cp.stage(
-        "spans",
-        lambda: detect_spans(
-            tokenize(load_documents(spark, sf_dir)), gazetteer_df(spark, GAZETTEERS)
-        ),
-        params=params,
-    )
-    frames = cp.stage(
-        "frames",
-        lambda: assemble_frames(
-            best_fillers(
-                score_pairs(
-                    candidate_pairs(spans, whitelist_df(spark, plan), MAX_TOKEN_DISTANCE)
-                )
-            ),
-            plan,
-        ),
-        params=params,
-        upstream=["spans"],
-    )
-    triples = cp.stage(
-        "triples",
-        lambda: frames_to_triples(frames, entity_dictionary(spark, ENTITY_ALIASES)),
-        params=params,
-        upstream=["frames"],
-    )
-    return {"spans": spans, "frames": frames, "triples": triples, "_pipeline": cp}
+    def checkpoint(name: str, step: Callable, df: DataFrame) -> DataFrame:
+        steps.append(step)
+        if name not in CHECKPOINTED:
+            return df  # composed into the next checkpoint's build
+
+        def build() -> DataFrame:
+            out = df
+            for s in steps:
+                out = s(out)
+            return out
+
+        params = fingerprint(*inputs, *map(step_definition, steps))
+        out = cp.stage(name, build, params=params, upstream=upstream[-1:])
+        inputs.clear()
+        steps.clear()
+        upstream.append(name)
+        return out
+
+    stages = run_stages(load_documents(spark, sf_dir), checkpoint)
+    return {**{n: stages[n] for n in CHECKPOINTED}, "_pipeline": cp}

@@ -36,6 +36,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def normalize_documents(df: DataFrame) -> DataFrame:
+    """Either input shape -> the canonical columns, in order: ``url``
+    becomes ``doc_id``, a missing ``source`` becomes "unknown", and
+    ``doc_id`` is cast to string so parquet bigint ids and real urls share
+    a plan. Batch loads and streaming micro-batches both go through it."""
+    if "url" in df.columns and "doc_id" not in df.columns:
+        df = df.withColumnRenamed("url", "doc_id")
+    if "source" not in df.columns:
+        df = df.withColumn("source", F.lit("unknown"))
+    return df.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("text"),
+        F.col("lang"),
+        F.col("source"),
+    )
+
+
 def load_documents(
     spark: SparkSession,
     sf_dir: str,
@@ -44,9 +61,9 @@ def load_documents(
 ) -> DataFrame:
     """Canonical `documents` DataFrame: doc_id:string, text, lang, source.
 
-    ``doc_id`` is the document's stable identity (url in production); cast
-    to string so parquet bigint ids and real urls share a plan. Selecting
-    only ``columns`` (plus doc_id) lets Catalyst prune the scan.
+    ``doc_id`` is the document's stable identity (url in production; see
+    `normalize_documents`). Selecting only ``columns`` (plus doc_id) lets
+    Catalyst prune the scan.
 
     ``partition_by_doc`` hash-partitions the corpus on doc_id with the
     session's shuffle-partition count. This is the ONE shuffle the pipeline
@@ -58,17 +75,7 @@ def load_documents(
     Iceberg corpus bucketed by url this becomes a no-op (storage-partitioned
     scan already satisfies the distribution).
     """
-    df = load_table(spark, sf_dir, "documents")
-    if "url" in df.columns and "doc_id" not in df.columns:
-        df = df.withColumnRenamed("url", "doc_id")
-    if "source" not in df.columns:
-        df = df.withColumn("source", F.lit("unknown"))
-    df = df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("text"),
-        F.col("lang"),
-        F.col("source"),
-    )
+    df = normalize_documents(load_table(spark, sf_dir, "documents"))
     if columns is not None:
         keep = ["doc_id"] + [c for c in columns if c != "doc_id"]
         df = df.select(*keep)

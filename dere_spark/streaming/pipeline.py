@@ -17,10 +17,23 @@ from __future__ import annotations
 from typing import Optional
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+#: Source schema assumed while the source directory is still empty.
 DOCUMENTS_DDL = "doc_id string, text string, lang string, source string, n_chars long"
+
+
+def _source_schema(spark: SparkSession, source_dir: str):
+    """The schema of the documents already in ``source_dir`` (so int64
+    ``doc_id`` or ``url``-keyed drops stream as they are), or
+    ``DOCUMENTS_DDL`` while it holds none — a query started on an empty
+    directory therefore expects string ids until it is restarted."""
+    try:
+        return spark.read.parquet(source_dir).schema
+    except AnalysisException:
+        return DOCUMENTS_DDL
 
 
 def stream_extract_triples(
@@ -31,7 +44,9 @@ def stream_extract_triples(
     available_now: bool = True,
 ) -> StreamingQuery:
     """readStream(parquet documents) -> foreachBatch(batch KG plan) ->
-    append parquet triples.
+    append parquet triples. Each micro-batch goes through the same
+    documents normalization and stage chain as a batch run, so the stream
+    accepts whatever `load_documents` accepts.
 
     `available_now=True` drains everything currently in the source then
     stops — the test/backfill trigger; production uses processingTime.
@@ -43,36 +58,15 @@ def stream_extract_triples(
     dynamic partition overwrite, so a replayed batch REPLACES its own
     partition instead of appending a duplicate copy.
     """
-    from dere_spark.operators.frames import assemble_frames, best_fillers, score_pairs
-    from dere_spark.operators.pairs import candidate_pairs, whitelist_df
-    from dere_spark.operators.spans import detect_spans, gazetteer_df
-    from dere_spark.operators.tokenize import tokenize
-    from dere_spark.operators.triples import entity_dictionary, frames_to_triples
-    from dere_spark.webtext import (
-        ENTITY_ALIASES,
-        GAZETTEERS,
-        MAX_TOKEN_DISTANCE,
-        webtext_plan,
-    )
+    from dere_spark.sources.documents import normalize_documents
+    from dere_spark.webtext import run_stages
 
-    plan = webtext_plan()
-    gaz = gazetteer_df(spark, GAZETTEERS)
-    wl = whitelist_df(spark, plan)
-    dictionary = entity_dictionary(spark, ENTITY_ALIASES)
-
-    stream = (
-        spark.readStream.schema(DOCUMENTS_DDL).parquet(source_dir)
+    stream = spark.readStream.schema(_source_schema(spark, source_dir)).parquet(
+        source_dir
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text", "lang", "source"
-        )
-        tokens = tokenize(docs)
-        spans = detect_spans(tokens, gaz)
-        pairs = candidate_pairs(spans, wl, MAX_TOKEN_DISTANCE)
-        frames = assemble_frames(best_fillers(score_pairs(pairs)), plan)
-        triples = frames_to_triples(frames, dictionary)
+        triples = run_stages(normalize_documents(batch_df))["triples"]
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")

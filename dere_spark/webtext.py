@@ -15,39 +15,33 @@ zero Python UDFs — so the whole plan runs inside whole-stage codegen and
 scales linearly with executors; documents are the unit of parallelism end
 to end.
 
-Physical-strategy note (r2, measured): the shuffle-free Arrow tokenizer
-(`tokenize_arrow`) halves the plan's data exchanges (4 -> 2: documents
-are never repartitioned) and wins on single-JVM local[32] (~20% faster
-flagship), but LOSES in multi-executor mode (same-session A/B at
-local-cluster[1x8], 100x corpus: window 31-42 s vs arrow 36-59 s): the
-Python->JVM Arrow IPC of the full token stream costs more than the
-document shuffle it saves. Exchange COUNT is not the cost model —
-bytes x medium is. The windowed JVM tokenizer stays the base layer; the
-Arrow one remains available (equivalence-tested) for IO-bound corpora
-where token volume ~ document volume.
+The chain is defined ONCE, as ``STAGES`` — an ordered tuple of
+``(name, step)`` where each step maps the previous stage's DataFrame to
+its own — and ``run_stages`` walks it. Batch (`build_stages`), cached
+(`cached_stages`), checkpointed (`plans.checkpoint`) and streaming
+(`streaming.pipeline`, one walk per micro-batch) runs all go through that
+walk, so every execution mode emits the same triples for the same input.
 
-r3 update: the DEFAULT front door is now Treebank segmentation
-(`tokenize_treebank_sql`) — the reference tokenizes Treebank-style
-(span_classifier.py:361) and whitespace-by-default was only right for
-the synthetic corpus. The implementation keeps the measured-fastest
-physical shape: it builds ON the windowed JVM tokenizer (same single
-doc_id exchange) and sub-splits words with the nltk rule chain compiled
-to Catalyst regexp_replace expressions, so no token bytes ever cross the
-Python boundary; purely alphanumeric words (the vast majority) skip the
-regex chain entirely via a one-rlike fast path.
+Tokenization is Treebank segmentation (`tokenize_treebank_sql`, the
+reference's front door: span_classifier.py:361) compiled to JVM
+regexp_replace expressions on top of the windowed whitespace tokenizer.
+It is the only front door because it keeps every token byte in the JVM:
+an Arrow-kernel tokenizer that skips the doc_id shuffle was measured
+slower in multi-executor mode, since Python<->JVM IPC of the full token
+stream costs more than the document shuffle it saves.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Dict
+from typing import Callable, Dict, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dere_spark.operators.frames import assemble_frames, best_fillers, score_pairs
 from dere_spark.operators.pairs import candidate_pairs, whitelist_df
 from dere_spark.operators.spans import detect_spans, gazetteer_df
-from dere_spark.operators.tokenize import tokenize
+from dere_spark.operators.treebank import tokenize_treebank_sql
 from dere_spark.operators.triples import entity_dictionary, frames_to_triples
 from dere_spark.plans.compiler import PlanSpec, compile_plan
 from dere_spark.sources.documents import load_documents
@@ -76,6 +70,8 @@ ENTITY_ALIASES: Dict[str, str] = {
 
 MAX_TOKEN_DISTANCE = 3
 
+Step = Callable[[DataFrame], DataFrame]
+
 
 def load_webtext_spec() -> TaskSpecification:
     return load_task_spec(SPEC_PATH)
@@ -85,64 +81,66 @@ def webtext_plan() -> PlanSpec:
     return compile_plan(load_webtext_spec())
 
 
-def build_stages(
-    spark: SparkSession, sf_dir: str, tokenizer: str = "treebank"
+def _spans(tokens: DataFrame) -> DataFrame:
+    return detect_spans(tokens, gazetteer_df(tokens.sparkSession, GAZETTEERS))
+
+
+def _pairs(spans: DataFrame) -> DataFrame:
+    wl = whitelist_df(spans.sparkSession, webtext_plan())
+    return candidate_pairs(spans, wl, MAX_TOKEN_DISTANCE)
+
+
+def _frames(pairs: DataFrame) -> DataFrame:
+    return assemble_frames(best_fillers(score_pairs(pairs)), webtext_plan())
+
+
+def _triples(frames: DataFrame) -> DataFrame:
+    dictionary = entity_dictionary(frames.sparkSession, ENTITY_ALIASES)
+    return frames_to_triples(frames, dictionary)
+
+
+#: The flagship stage chain: (name, step), each step a function of the
+#: previous stage's DataFrame (the first one's input is ``documents``).
+STAGES: Tuple[Tuple[str, Step], ...] = (
+    ("tokens", tokenize_treebank_sql),
+    ("spans", _spans),
+    ("pairs", _pairs),
+    ("frames", _frames),
+    ("triples", _triples),
+)
+
+
+def run_stages(
+    documents: DataFrame,
+    hook: Callable[[str, Step, DataFrame], DataFrame] = lambda name, step, df: step(df),
 ) -> Dict[str, DataFrame]:
+    """Walk ``STAGES`` from a canonical ``documents`` DataFrame; returns
+    stage name -> DataFrame, ``documents`` included. ``hook(name, step,
+    upstream)`` returns what the walk passes on as stage ``name`` — the
+    default applies the step; execution modes pass one that also persists
+    or checkpoints it."""
+    stages = {"documents": documents}
+    df = documents
+    for name, step in STAGES:
+        df = stages[name] = hook(name, step, df)
+    return stages
+
+
+def build_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     """Construct every stage of the pipeline lazily; nothing executes until
-    an action runs. Returned dict keys are stage names -> DataFrames.
-
-    ``tokenizer``: "treebank" (DEFAULT since r3 — nltk-3.3-parity rule
-    chain compiled to JVM regexp_replace expressions, the reference's
-    front door for real punctuated web text: span_classifier.py:361;
-    identical output to whitespace on the space-separated synthetic
-    corpus, which is what keeps every kg_* oracle like-for-like),
-    "treebank_arrow" (same semantics, Arrow kernel — recorded-vector
-    ground truth), "whitespace" (plain JVM window tokenizer), or "arrow"
-    (whitespace semantics, shuffle-free kernel).
-    """
-    plan = webtext_plan()
-    if tokenizer == "treebank":
-        from dere_spark.operators.treebank import tokenize_treebank_sql
-
-        documents = load_documents(spark, sf_dir)
-        tokens = tokenize_treebank_sql(documents)
-    elif tokenizer == "treebank_arrow":
-        from dere_spark.operators.treebank import tokenize_treebank
-
-        documents = load_documents(spark, sf_dir, partition_by_doc=False)
-        tokens = tokenize_treebank(documents)
-    elif tokenizer == "arrow":
-        from dere_spark.operators.tokenize import tokenize_arrow
-
-        documents = load_documents(spark, sf_dir, partition_by_doc=False)
-        tokens = tokenize_arrow(documents)
-    elif tokenizer == "whitespace":
-        documents = load_documents(spark, sf_dir)
-        tokens = tokenize(documents)
-    else:
-        raise ValueError(f"unknown tokenizer: {tokenizer}")
-    gaz = gazetteer_df(spark, GAZETTEERS)
-    spans = detect_spans(tokens, gaz)
-    wl = whitelist_df(spark, plan)
-    pairs = candidate_pairs(spans, wl, MAX_TOKEN_DISTANCE)
-    ranked = best_fillers(score_pairs(pairs))
-    frames = assemble_frames(ranked, plan)
-    dictionary = entity_dictionary(spark, ENTITY_ALIASES)
-    triples = frames_to_triples(frames, dictionary)
-    return {
-        "documents": documents,
-        "tokens": tokens,
-        "spans": spans,
-        "pairs": pairs,
-        "frames": frames,
-        "triples": triples,
-    }
+    an action runs. Returned dict keys are stage names -> DataFrames."""
+    return run_stages(load_documents(spark, sf_dir))
 
 
 #: Per-application memo of cached pipeline stages. Keyed by
 #: (applicationId, sf_dir) so a new SparkSession never sees another
 #: session's DataFrames.
 _STAGE_CACHE: Dict[tuple, Dict[str, DataFrame]] = {}
+
+
+def _persist_shared(name: str, step: Step, upstream: DataFrame) -> DataFrame:
+    df = step(upstream)
+    return df.persist() if name in ("spans", "triples") else df
 
 
 def cached_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
@@ -165,10 +163,7 @@ def cached_stages(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
         del _STAGE_CACHE[k]
     key = (app_id, sf_dir)
     if key not in _STAGE_CACHE:
-        stages = build_stages(spark, sf_dir)
-        stages["spans"] = stages["spans"].persist()
-        stages["triples"] = stages["triples"].persist()
-        _STAGE_CACHE[key] = stages
+        _STAGE_CACHE[key] = run_stages(load_documents(spark, sf_dir), _persist_shared)
     return _STAGE_CACHE[key]
 
 

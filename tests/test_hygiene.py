@@ -30,3 +30,14 @@ def test_no_iterrows_anywhere():
 def test_no_rdd_map_in_package():
     # the engine is DataFrame-first: per-row RDD lambdas bypass codegen
     assert _grep(".rdd.map(") == []
+
+
+def test_stage_chain_is_wired_only_in_webtext():
+    # the flagship chain is defined once (webtext.STAGES) and every
+    # execution mode walks it; a hand-wired copy elsewhere would drift
+    for op in ("candidate_pairs(", "assemble_frames(", "frames_to_triples("):
+        calls = [
+            h for h in _grep(op)
+            if not h.startswith("dere_spark/webtext.py:") and f"def {op}" not in h
+        ]
+        assert calls == [], f"{op} called outside webtext.py: {calls}"

@@ -29,7 +29,8 @@ def test_pipeline_shuffle_budget(spark, sf_dir):
     forcing a re-shuffle on all join keys would be pure waste. Downstream
     windows include the bucket in their partition keys and also reuse it.
     Dimension joins must all be broadcasts. (A 2-exchange Arrow-tokenizer
-    variant was measured and rejected: see webtext.py's note.)"""
+    variant was measured slower in multi-executor mode and removed; the
+    webtext module docstring gives the reason.)"""
     plan = _executed_plan(build_stages(spark, sf_dir)["triples"])
     counts = Counter(re.findall(r"(\w*Exchange\w*)", plan))
     data_exchanges = counts.get("Exchange", 0)

@@ -104,6 +104,40 @@ def test_checkpoint_invalidates_on_input_regeneration(spark, sf_dir, tmp_path):
     assert third["triples"].count() == n
 
 
+def test_checkpoint_recomputes_from_a_swapped_step(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A checkpoint's fingerprint covers how its stage is computed, not
+    only the input and parameters: swapping one step of the stage chain
+    recomputes that stage and every stage downstream of it — a root
+    written by an older chain (e.g. whitespace tokens) is never reused."""
+    import dere_spark.webtext as webtext
+    from dere_spark.operators.tokenize import tokenize
+
+    chain = webtext.STAGES
+
+    def run(**swapped):
+        monkeypatch.setattr(
+            webtext, "STAGES", tuple((n, swapped.get(n, st)) for n, st in chain)
+        )
+        cp = run_checkpointed_extraction(spark, sf_dir, root)["_pipeline"]
+        return [cp.reused(n) for n in ("spans", "frames", "triples")]
+
+    def frames_again(pairs):  # same output, different definition
+        return webtext._frames(pairs)
+
+    root = str(tmp_path / "cp")
+    assert run(tokens=tokenize) == [False, False, False]
+    assert run(tokens=tokenize) == [True, True, True]
+    assert run(tokens=tokenize, frames=frames_again) == [True, False, False]
+    # back to the real chain: the whitespace-token root is stale throughout
+    assert run() == [False, False, False]
+    out = run_checkpointed_extraction(spark, sf_dir, root)
+    assert out["_pipeline"].reused("spans")
+    direct = extract_triples(spark, sf_dir)
+    assert sorted(out["triples"].collect()) == sorted(direct.collect())
+
+
 def test_salted_join_equals_plain_join(spark, sf_dir):
     docs = load_documents(spark, sf_dir).limit(200)
     dim = spark.createDataFrame(
@@ -178,6 +212,27 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     q3 = stream_extract_triples(spark, src, out, cp, available_now=True)
     q3.awaitTermination(300)
     assert spark.read.parquet(out).count() == batch.count()
+
+
+def test_streaming_accepts_int64_doc_ids(spark, sf_dir, tmp_path):
+    """A documents table with int64 ``doc_id`` (the sf corpora) streams
+    as-is: the micro-batches go through the same documents normalization
+    as ``load_documents``, so the streamed triples equal the batch ones."""
+    import os
+
+    from dere_spark.streaming.pipeline import stream_extract_triples
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
+    out = str(tmp_path / "out")
+    q = stream_extract_triples(spark, src, out, str(tmp_path / "cp"), available_now=True)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    streamed = spark.read.parquet(out).drop("batch_id")
+    batch = extract_triples(spark, sf_dir)
+    assert streamed.count() > 0
+    assert sorted(streamed.collect()) == sorted(batch.select(*streamed.columns).collect())
 
 
 def test_merge_sessions_gap_semantics():

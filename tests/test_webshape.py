@@ -7,6 +7,7 @@ extracted text is byte-identical end to end."""
 from __future__ import annotations
 
 import datetime
+import hashlib
 import re
 
 import pyspark.sql.functions as F
@@ -71,11 +72,14 @@ def test_web_shape_text_fidelity(spark, tmp_path):
     assert fidelity_violations(docs, tokenize(docs)).count() == 0
 
 
-def test_treebank_tokenizer_pipeline_on_punctuated_text(spark, tmp_path):
-    """On punctuated web text the whitespace tokenizer glues terms to
-    punctuation ("join," never matches the gazetteer); the treebank
-    front door recovers the extraction."""
-    import pyspark.sql.functions as F
+def test_execution_modes_agree_on_punctuated_text(spark, tmp_path):
+    """Batch, cached, checkpointed and streaming runs all walk the one
+    stage chain, so on punctuated web text they emit identical triples,
+    and the Treebank front door finds the comma-glued operator ("join,"
+    never matches the gazetteer under whitespace splitting)."""
+    from dere_spark.plans.checkpoint import run_checkpointed_extraction
+    from dere_spark.streaming.pipeline import stream_extract_triples
+    from dere_spark.webtext import cached_stages, invalidate_cached_stages
 
     rows = [
         (f"u{i}", f"spark join, table {i}. customer sort fast!", "en", "web")
@@ -85,9 +89,29 @@ def test_treebank_tokenizer_pipeline_on_punctuated_text(spark, tmp_path):
     out = str(tmp_path / "punct")
     df.write.mode("overwrite").parquet(f"{out}/documents.parquet")
 
-    ws = build_stages(spark, out, tokenizer="whitespace")["triples"]
-    tb = build_stages(spark, out, tokenizer="treebank")["triples"]
-    n_ws, n_tb = ws.count(), tb.count()
-    assert n_tb > n_ws, (n_ws, n_tb)
-    # and the treebank path finds the comma-glued operator
-    assert tb.where(F.col("pred").startswith("Operation")).count() > 0
+    stream_out = str(tmp_path / "stream")
+    query = stream_extract_triples(
+        spark, f"{out}/documents.parquet", stream_out, str(tmp_path / "chk")
+    )
+    query.awaitTermination(300)
+    assert query.exception() is None
+    modes = {
+        "batch": build_stages(spark, out)["triples"],
+        "cached": cached_stages(spark, out)["triples"],
+        "checkpointed": run_checkpointed_extraction(spark, out, str(tmp_path / "cp"))[
+            "triples"
+        ],
+        "streaming": spark.read.parquet(stream_out),
+    }
+    cols = ["subj", "pred", "obj", "doc_id", "frame_id", "confidence"]
+    try:
+        digests = {
+            mode: hashlib.md5(
+                repr(sorted(map(tuple, t.select(*cols).collect()))).encode()
+            ).hexdigest()
+            for mode, t in modes.items()
+        }
+    finally:
+        invalidate_cached_stages(spark, out)
+    assert len(set(digests.values())) == 1, digests
+    assert modes["batch"].where(F.col("pred").startswith("Operation")).count() > 0
